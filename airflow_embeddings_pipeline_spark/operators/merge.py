@@ -425,50 +425,68 @@ def merge_upsert_write_pruned(
     key-idempotent, so recomputing against the newer snapshot yields
     exactly the state a serial execution would; with retries exhausted
     the conflict propagates to the caller.
+
+    ``source`` is evaluated ONCE per call: it is persisted before the
+    first attempt and unpersisted after the commit and the ride-along
+    vacuum, so the key collect (or range join), both ``decompose``
+    legs, the band writes, the MoR null-key probe and every conflict
+    retry read the same rows — the pruning decision and the merged
+    rows agree even for a non-deterministic source, and a source
+    behind a Python data source or UDF crosses into Python once.  A
+    source the caller already cached is used as is and left cached.
     """
+    from pyspark import StorageLevel
+
     from ..sources.versioned import SnapshotConflictError
 
     if write_mode not in ("cow", "mor"):
         raise ValueError(f"unknown write_mode: {write_mode!r}")
     root_key = os.path.abspath(target_path)
+    pin = source.storageLevel == StorageLevel.NONE
+    if pin:
+        source.persist()
     attempt = 0
-    while True:
-        # adaptive optimism: first attempts PREPARE outside the lock
-        # (parallel writers' data jobs overlap — the disjoint-scope
-        # win), unless recent conflicts on this table were dominated
-        # by genuine recomputes (a scattered storm, where a discarded
-        # staged write per conflict burns shared cluster time) or this
-        # call already recomputed once.  Retries and storms write
-        # under the lock, where the CAS aborts BEFORE the write job.
-        mode = (
-            "inline"
-            if attempt > 0 or _conflict_storming(root_key)
-            else "prepared"
-        )
-        try:
-            stats = _pruned_merge_attempt(
-                target_path,
-                source,
-                key,
-                update_columns=update_columns,
-                schema_evolution=schema_evolution,
-                delete_when=delete_when,
-                evolution_exclude=evolution_exclude,
-                app_metadata=app_metadata,
-                vacuum_keep_last=vacuum_keep_last,
-                max_exact_keys=max_exact_keys,
-                write_mode=write_mode,
-                max_dv_rows=max_dv_rows,
-                publish_mode=mode,
+    try:
+        while True:
+            # adaptive optimism: first attempts PREPARE outside the lock
+            # (parallel writers' data jobs overlap — the disjoint-scope
+            # win), unless recent conflicts on this table were dominated
+            # by genuine recomputes (a scattered storm, where a discarded
+            # staged write per conflict burns shared cluster time) or this
+            # call already recomputed once.  Retries and storms write
+            # under the lock, where the CAS aborts BEFORE the write job.
+            mode = (
+                "inline"
+                if attempt > 0 or _conflict_storming(root_key)
+                else "prepared"
             )
-            if stats.get("rebased"):
-                _conflict_note(root_key, "absorb")
-            return stats
-        except SnapshotConflictError:
-            _conflict_note(root_key, "recompute")
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
+            try:
+                stats = _pruned_merge_attempt(
+                    target_path,
+                    source,
+                    key,
+                    update_columns=update_columns,
+                    schema_evolution=schema_evolution,
+                    delete_when=delete_when,
+                    evolution_exclude=evolution_exclude,
+                    app_metadata=app_metadata,
+                    vacuum_keep_last=vacuum_keep_last,
+                    max_exact_keys=max_exact_keys,
+                    write_mode=write_mode,
+                    max_dv_rows=max_dv_rows,
+                    publish_mode=mode,
+                )
+                if stats.get("rebased"):
+                    _conflict_note(root_key, "absorb")
+                return stats
+            except SnapshotConflictError:
+                _conflict_note(root_key, "recompute")
+                if attempt >= conflict_retries:
+                    raise
+                attempt += 1
+    finally:
+        if pin:
+            source.unpersist()
 
 
 def _pruned_merge_attempt(
@@ -761,10 +779,8 @@ def _pruned_merge_attempt(
         # CAS miss under the commit lock — range_join_conflict's
         # rebase-scope test.  Persist ONCE and keep it through the
         # commit (unpersisted in the finally around the commit below):
-        # unpersisting earlier would re-evaluate a possibly
-        # non-deterministic source under the lock, judging
-        # disjointness against different keys than the prepared
-        # output, and re-run the distinct shuffle while holding it.
+        # unpersisting earlier would re-run the distinct shuffle over
+        # the pinned source while holding the lock.
         src_keys.persist()
         try:
             n_src = src_keys.count()

@@ -234,14 +234,7 @@ def _scratch_dir(root: str, sf_dir: str) -> str:
     import shutil
     import time
 
-    def _alive(pid: int) -> bool:
-        try:
-            os.kill(pid, 0)
-            return True
-        except ProcessLookupError:
-            return False
-        except PermissionError:
-            return True
+    from ..sources.document_store import _pid_alive
 
     key = sf_dir.strip("/").replace("/", "_")
     try:
@@ -249,7 +242,7 @@ def _scratch_dir(root: str, sf_dir: str) -> str:
         for d in os.listdir(root):
             p = os.path.join(root, d)
             pid_s = d.rsplit(".", 1)[-1]
-            if pid_s.isdigit() and _alive(int(pid_s)):
+            if pid_s.isdigit() and _pid_alive(int(pid_s)):
                 continue
             if now - os.path.getmtime(p) > 3600:
                 shutil.rmtree(p, ignore_errors=True)

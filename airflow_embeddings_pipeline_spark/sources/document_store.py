@@ -6,7 +6,10 @@ pushed server-side) rebuilt on Spark 4's DataSource API.
 Spark-first mapping of the reference's connector behaviors:
 
 - the paginated cursor (LIMIT/SKIP batches, reference O2) becomes
-  PARALLEL input partitions — one per store block, all read at once;
+  PARALLEL input partitions, all read at once: consecutive store
+  blocks pack into one partition of up to ``PACK_BYTES`` (a bigger
+  block is a partition of its own), so a store of many tiny appended
+  blocks costs one Python task, not one per block;
 - `$match` pushdown becomes :meth:`DocumentStoreReader.pushFilters`:
   range/equality predicates on the indexed ``doc_id`` prune whole
   blocks via the store manifest's per-block [min_id, max_id] BEFORE any
@@ -15,11 +18,11 @@ Spark-first mapping of the reference's connector behaviors:
 - the schemaless-document defensiveness (``doc.get(k, default)``)
   becomes explicit: missing JSON fields surface as NULLs.
 
-At 100 TB the same reader fans out to one task per block and prunes by
-manifest exactly like parquet partition pruning — the Python row parse
-is the slow path (documented; the parquet scan is the engine's fast
-path, this source exists for Mongo-shaped stores where parquet isn't
-an option).
+At 100 TB the same reader fans out to one task per ``PACK_BYTES`` of
+surviving blocks and prunes by manifest exactly like parquet partition
+pruning — the Python row parse is the slow path (documented; the
+parquet scan is the engine's fast path, this source exists for
+Mongo-shaped stores where parquet isn't an option).
 """
 
 from __future__ import annotations
@@ -46,9 +49,48 @@ from pyspark.sql.types import StructType
 STORE_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-class _Block(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+# Byte budget of one input partition: Spark's own file source charges
+# every file spark.sql.files.openCostInBytes (default 4 MB) when it packs
+# small files into a task, i.e. a task is not worth starting for less.
+# Each Python task pays a worker round trip that dwarfs parsing a few MB
+# of JSONL, so consecutive surviving blocks share a task up to this size.
+PACK_BYTES = 4 * 1024 * 1024
+
+
+class _Pack(InputPartition):
+    """Consecutive manifest blocks read by one task (empty: the zero-row
+    sentinel — Spark requires >= 1 partition from a Python data source;
+    an empty sequence makes it invoke read(None))."""
+
+    def __init__(self, paths: list[str]):
+        self.paths = paths
+
+
+def _pack_blocks(root: str, blocks: list[dict]) -> list[_Pack]:
+    """Pack ``blocks`` (already pruned, in manifest order) into partitions
+    of up to :data:`PACK_BYTES`; a block bigger than that gets its own.
+    Only the kept blocks are stat'ed, never opened."""
+    packs: list[_Pack] = []
+    cur: list[str] = []
+    cur_bytes = 0
+    for b in blocks:
+        path = os.path.join(root, b["file"])
+        size = os.path.getsize(path)
+        if cur and cur_bytes + size > PACK_BYTES:
+            packs.append(_Pack(cur))
+            cur, cur_bytes = [], 0
+        cur.append(path)
+        cur_bytes += size
+    if cur:
+        packs.append(_Pack(cur))
+    return packs or [_Pack([])]
+
+
+def _read_docs(partition: _Pack) -> Iterator[dict]:
+    for path in partition.paths:
+        with open(path) as fh:
+            for line in fh:
+                yield json.loads(line)
 
 
 class DocumentStoreReader(DataSourceReader):
@@ -115,26 +157,21 @@ class DocumentStoreReader(DataSourceReader):
         return True
 
     def partitions(self) -> Sequence[InputPartition]:
-        kept = [
-            _Block(os.path.join(self.root, b["file"]))
-            for b in self.manifest["blocks"]
-            if self._block_survives(b["min_id"], b["max_id"])
-        ]
-        # Spark requires >= 1 partition from a Python data source (an
-        # empty sequence makes it invoke read(None)); a pruned-empty
-        # scan returns one sentinel block that reads as zero rows.
-        return kept or [_Block(None)]
+        return _pack_blocks(
+            self.root,
+            [
+                b
+                for b in self.manifest["blocks"]
+                if self._block_survives(b["min_id"], b["max_id"])
+            ],
+        )
 
-    def read(self, partition: _Block) -> Iterator[tuple]:
-        if partition.path is None:
-            return
-        with open(partition.path) as fh:
-            for line in fh:
-                doc = json.loads(line)
-                if not self._row_passes(doc.get("doc_id")):
-                    continue
-                # schemaless defensiveness: absent fields -> NULL
-                yield tuple(doc.get(k) for k in self.fields)
+    def read(self, partition: _Pack) -> Iterator[tuple]:
+        for doc in _read_docs(partition):
+            if not self._row_passes(doc.get("doc_id")):
+                continue
+            # schemaless defensiveness: absent fields -> NULL
+            yield tuple(doc.get(k) for k in self.fields)
 
 
 class DocumentStoreDataSource(DataSource):
@@ -237,6 +274,23 @@ def register_document_store(spark) -> None:
 from contextlib import contextmanager
 
 
+def _pid_alive(pid: int) -> bool:
+    """Is ``pid`` a live process on this host?  (Every lock here and in
+    the versioned table is local-filesystem, so its holder is by
+    definition local.)  The engine's one liveness test lives in this
+    module because the module ships BY VALUE to Python workers
+    (:func:`register_document_store`): the writer's commit takes the
+    manifest lock in a worker that may not be able to import the
+    package, so the lock cannot import this from elsewhere."""
+    try:
+        os.kill(pid, 0)
+        return True
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+
+
 @contextmanager
 def _manifest_lock(root: str):
     """Exclusive manifest commit lock — the versioned store's
@@ -251,16 +305,6 @@ def _manifest_lock(root: str):
     definition local."""
     lock = os.path.join(root, ".commit.lock")
     os.makedirs(root, exist_ok=True)
-
-    def _alive(pid: int) -> bool:
-        try:
-            os.kill(pid, 0)
-            return True
-        except ProcessLookupError:
-            return False
-        except PermissionError:
-            return True
-
     acquired = False
     for _ in range(2):  # second pass only after a stale-lock steal
         try:
@@ -275,7 +319,7 @@ def _manifest_lock(root: str):
                     holder = int(f.read().strip() or 0)
             except (OSError, ValueError):
                 holder = 0
-            if holder and holder != os.getpid() and not _alive(holder):
+            if holder and holder != os.getpid() and not _pid_alive(holder):
                 # Crashed committer: steal ATOMICALLY by renaming the
                 # stale lock to a unique grave name — rename(2) succeeds
                 # for exactly one contender, so two stealers can never
@@ -722,9 +766,6 @@ class DocumentStoreStreamReader(DataSourceStreamReader):
         except FileNotFoundError:
             return {"generation": "0", "blocks": []}
 
-    def _blocks(self) -> list[dict]:
-        return self._manifest()["blocks"]
-
     def initialOffset(self) -> dict:
         return {"gen": self._manifest().get("generation", "0"), "block": 0}
 
@@ -751,18 +792,11 @@ class DocumentStoreStreamReader(DataSourceStreamReader):
                     f"{gen!r}): the store was overwritten; restart the "
                     "stream with a fresh checkpoint"
                 )
-        blocks = m["blocks"][start["block"] : end["block"]]
-        return [
-            _Block(os.path.join(self.root, b["file"])) for b in blocks
-        ] or [_Block(None)]
+        return _pack_blocks(self.root, m["blocks"][start["block"] : end["block"]])
 
-    def read(self, partition: _Block) -> Iterator[tuple]:
-        if partition.path is None:
-            return
-        with open(partition.path) as fh:
-            for line in fh:
-                doc = json.loads(line)
-                yield tuple(doc.get(k) for k in self.fields)
+    def read(self, partition: _Pack) -> Iterator[tuple]:
+        for doc in _read_docs(partition):
+            yield tuple(doc.get(k) for k in self.fields)
 
     def commit(self, end: dict) -> None:
         pass  # progress lives in Spark's checkpoint, nothing external

@@ -44,6 +44,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .document_store import _pid_alive
+
 _POINTER = "_CURRENT"
 _COMMITTED = "_COMMITTED"
 _MANIFEST = "_MANIFEST.json"
@@ -198,18 +200,6 @@ class ConstraintViolationError(RuntimeError):
 
 # sentinel: "no CAS requested" (None is a real value — the empty table)
 _NO_CAS = object()
-
-
-def _pid_alive(pid: int) -> bool:
-    """Is `pid` a live process on this host?  (The table contract is
-    local-filesystem, so the lock holder is by definition local.)"""
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
 
 
 def _check_local(path: str) -> str:

@@ -509,6 +509,78 @@ def test_pruned_merge_rewrites_only_touched_files(spark, tmp_path):
     assert got == expect
 
 
+def _counted_source(spark, rows):
+    """A merge source whose every row passes through a Python UDF that
+    counts it: the accumulator says how often the source was evaluated."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def _tick(k):
+        acc.add(1)
+        return k
+
+    tick = F.udf(_tick, "long")
+    df = spark.createDataFrame(rows, "k long, ref string, cat string")
+    return df.withColumn("k", tick("k")), acc
+
+
+@pytest.mark.parametrize(
+    "tier",
+    [
+        dict(),  # exact: keys collected to the driver
+        dict(max_exact_keys=2),  # range join: keys stay on executors
+        dict(write_mode="mor"),  # deletion vectors + appended images
+    ],
+    ids=["exact", "range-join", "mor"],
+)
+def test_pruned_merge_evaluates_source_once(spark, tmp_path, tier):
+    """The pruned MERGE reads its source once: pruning, both merge legs,
+    the band writes and the MoR null-key probe all share one evaluation,
+    and a source pinned by the merge is released afterwards."""
+    from pyspark import StorageLevel
+
+    from airflow_embeddings_pipeline_spark.operators.merge import (
+        merge_upsert,
+        merge_upsert_write_pruned,
+    )
+
+    path, table = _pruned_setup(spark, tmp_path)
+    rows = [(0, "upd-0", "new"), (2, "upd-2", "new"), (251, "ins-gap", "new"),
+            (100_000, "ins-high", "new")]
+    plain = spark.createDataFrame(rows, "k long, ref string, cat string")
+    expect = sorted(map(tuple, merge_upsert(table.read(spark), plain, "k").collect()))
+
+    source, acc = _counted_source(spark, rows)
+    stats = merge_upsert_write_pruned(path, source, "k", vacuum_keep_last=None, **tier)
+    assert stats["pruning"] == ("range-join" if "max_exact_keys" in tier else "exact")
+    assert stats["write_mode"] == tier.get("write_mode", "cow")
+    assert acc.value == len(rows)
+    assert source.storageLevel == StorageLevel.NONE
+    assert sorted(map(tuple, table.read(spark).collect())) == expect
+
+
+def test_pruned_merge_leaves_caller_cached_source_cached(spark, tmp_path):
+    from pyspark import StorageLevel
+
+    from airflow_embeddings_pipeline_spark.operators.merge import (
+        merge_upsert_write_pruned,
+    )
+
+    path, table = _pruned_setup(spark, tmp_path)
+    rows = [(4, "upd-4", "new"), (100_001, "ins-high", "new")]
+    source, acc = _counted_source(spark, rows)
+    source.persist()
+    try:
+        merge_upsert_write_pruned(path, source, "k", vacuum_keep_last=None)
+        assert source.storageLevel != StorageLevel.NONE
+        assert acc.value == len(rows)
+        assert source.count() == len(rows)
+        assert acc.value == len(rows)  # served from the caller's cache
+    finally:
+        source.unpersist()
+    got = {r["k"]: r["ref"] for r in table.read(spark).collect()}
+    assert got[4] == "upd-4" and got[100_001] == "ins-high"
+
+
 def test_pruned_merge_insert_inside_carried_range_touches_that_file(
     spark, tmp_path
 ):

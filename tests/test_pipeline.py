@@ -52,7 +52,7 @@ def test_pipeline_merge_replay_idempotent(spark, sf_dir):
     assert once == twice
 
 
-def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir):
+def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir, tmp_path):
     """r12: lifecycle entries seed their scratch tables by cloning one
     per-process template.  The clone must be observationally identical
     to a direct initial commit (rows, schema, version number, manifest
@@ -70,13 +70,13 @@ def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir):
         VersionedParquetTable,
     )
 
-    a = _orders_kps_table(spark, sf_dir, _scratch_dir("/tmp/t_kps_a", sf_dir))
+    a = _orders_kps_table(spark, sf_dir, _scratch_dir(str(tmp_path / "t_kps_a"), sf_dir))
     n_templates = len(_ORDERS_KPS_TEMPLATES)
-    b = _orders_kps_table(spark, sf_dir, _scratch_dir("/tmp/t_kps_b", sf_dir))
+    b = _orders_kps_table(spark, sf_dir, _scratch_dir(str(tmp_path / "t_kps_b"), sf_dir))
     assert len(_ORDERS_KPS_TEMPLATES) == n_templates  # memo hit, no rebuild
 
     orders = load_table(spark, sf_dir, "orders")
-    direct_path = _scratch_dir("/tmp/t_kps_direct", sf_dir)
+    direct_path = _scratch_dir(str(tmp_path / "t_kps_direct"), sf_dir)
     direct = VersionedParquetTable(direct_path)
     direct.commit_with_manifest(
         orders.select(
@@ -106,5 +106,3 @@ def test_orders_kps_template_clone_matches_direct_commit(spark, sf_dir):
     shutil.rmtree(a.root)
     assert b.read(spark).count() == rows_b
 
-    for p in ("/tmp/t_kps_b", "/tmp/t_kps_direct"):
-        shutil.rmtree(p, ignore_errors=True)
